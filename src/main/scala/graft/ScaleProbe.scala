@@ -251,10 +251,12 @@ object ScaleProbe {
     //    reported from the final micro-batch's state operator) tracks
     //    the corpus — the documented O(distinct docs) bound — while the
     //    store itself lives on local disk, not executor heap.
-    val (nSDedup, tSDedup) = timed {
-      StreamDedup.documentsDedupOnce(spark, work, useRocksDb = true).count()
+    val ((nSDedup, tSDedup), dedupState) = graft.ts.Replay.withStateMetrics(spark) {
+      timed {
+        StreamDedup.documentsDedupOnce(spark, work, useRocksDb = true).count()
+      }
     }
-    val (stateRows, stateBytes) = StreamDedup.lastStateMetrics.getOrElse((-1L, -1L))
+    val (stateRows, stateBytes) = dedupState.getOrElse((-1L, -1L))
 
     // 3. ts_mrange_groupby verbatim: label filter -> per-series daily
     //    avg -> cross-series sum reduce, over N× series
@@ -444,13 +446,6 @@ object ScaleProbe {
         pruneStats = Some(bandRef)).count()
     }
     val (bandSurv, bandCand) = bandRef.get
-    // Streaming gap detection over N× series: ONE long of state per
-    //    series; per-batch work O(batch). Sub-linear wall expected.
-    val (nGapsS, tGapsS) = timed {
-      graft.ts.StreamSessions.gapsStreamOnce(spark,
-        TSModel.samples(spark, work), 2 * DAY,
-        Some(T0), Some(T31), nChunks = 4).count()
-    }
     // Image perceptual-hash near-dup at the PRODUCTION grid (6 →
     //    60-bit hash, 15-bit bands): candidate join keys stay
     //    selective, so wall should track the decode scan ~linearly.
@@ -761,7 +756,6 @@ object ScaleProbe {
       s""""dtw_pruned_survivors":$pruneSurv,"dtw_pruned_candidates":$pruneCand,""" +
       s""""dtw_banded_sec":${s2(tDtwBand)},"dtw_banded_rows":$nDtwBand,""" +
       s""""dtw_banded_survivors":$bandSurv,"dtw_banded_candidates":$bandCand,""" +
-      s""""gaps_stream_sec":${s2(tGapsS)},"gaps_stream_rows":$nGapsS,""" +
       s""""ccf_sec":${s2(tCcf)},"ccf_rows":$nCcf,""" +
       s""""forecast_sec":${s2(tFc)},"forecast_rows":$nFc,""" +
       s""""zipf_fit_sec":${s2(tZipf)},"zipf_fit_rows":$nZipf,""" +

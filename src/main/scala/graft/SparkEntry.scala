@@ -2394,14 +2394,14 @@ object SparkEntry {
       // in time-ordered micro-batches; the oracle re-derives the
       // same semantics as a cumulative window — the state path is
       // hash-checked against a closed form
-      // Since r14 the five series-keyed monitors (z-score, CUSUM,
-      // rolling quantile, gaps, seasonal cohorts) are slices of ONE shared
+      // The five series-keyed monitors (z-score, CUSUM, rolling
+      // quantile, gaps, seasonal cohorts) are slices of ONE shared
       // pass — the production shape: one ingest stream, N monitors,
-      // one stateful shuffle (StreamMonitors scaladoc; the spec pins
-      // every slice bit-equal to its individual one-shot twin, whose
-      // oracles these queries keep). ts_stream_shared_pass below
-      // carries the pass's real cost in the bench (cacheKey = None
-      // forces a fresh run every rep).
+      // one stateful shuffle (StreamMonitors scaladoc; the specs pin
+      // every slice against its closed form, and each query keeps its
+      // monitor's own oracle). ts_stream_shared_pass below carries
+      // the pass's real cost in the bench (cacheKey = None forces a
+      // fresh run every rep).
       "ts_anomaly_stream" -> ((s, dir) =>
         graft.ts.StreamMonitors.zscoreSlice(sharedMonitors(s, dir))),
       // streaming SEASONAL anomaly: per-(series, dow-cohort) prefix

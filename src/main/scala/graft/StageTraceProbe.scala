@@ -15,12 +15,14 @@ object StageTraceProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     SparkEntry.queries("ts_range_agg_avg")(spark, dir).queryExecution.toRdd.count()
-    @volatile var jobs = 0; @volatile var stages = 0; @volatile var tasks = 0L
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.LongAdder()
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs += 1
+        jobs.incrementAndGet()
         val d = Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse("")
         val cs = j.properties match { case p if p != null => p.getProperty("callSite.short", "") case _ => "" }
         jobStart.put(j.jobId, (System.nanoTime(), s"$cs $d"))
@@ -31,7 +33,7 @@ object StageTraceProbe {
           f"job=${j.jobId}%3d wall=${(System.nanoTime() - st._1) / 1e9}%6.2f ${st._2}")
       }
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages += 1; tasks += s.stageInfo.numTasks
+        stages.incrementAndGet(); tasks.add(s.stageInfo.numTasks)
         val si = s.stageInfo
         val wall = (for (a <- si.submissionTime; b <- si.completionTime)
           yield (b - a) / 1e3).getOrElse(-1.0)
@@ -43,9 +45,10 @@ object StageTraceProbe {
     val t0 = System.nanoTime()
     SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(1000)
+    // drain the listener bus so no tail job/stage line is dropped
+    org.apache.spark.sql.GraftSessionBridge.waitListenerBusEmpty(spark, 30000L)
     spark.sparkContext.removeSparkListener(l)
-    println(f"TMPPROBE q=$q jobs=$jobs stages=$stages tasks=$tasks wall=$wall%.2f")
+    println(f"TMPPROBE q=$q jobs=${jobs.get} stages=${stages.get} tasks=${tasks.sum} wall=$wall%.2f")
     lines.toArray(Array.empty[String]).sorted.foreach(println)
     spark.stop()
   }

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /**
@@ -37,20 +37,16 @@ object StreamDedup {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** `(numRowsTotal, memoryUsedBytes)` of the final micro-batch's
-    * state operator in the LAST one-shot run — scale evidence for the
-    * state-cardinality bound (read by ScaleProbe right after the run;
-    * one-shot harness, not concurrent). */
-  @volatile private[graft] var lastStateMetrics: Option[(Long, Long)] = None
-
   /** Sub-files staged per micro-batch: each chunk is written as up to
     * this many range files and the source consumes them together
-    * (`maxFilesPerTrigger = subFiles`), so a trigger's read/map stage
-    * has one task PER FILE instead of one task per batch — the serial
-    * per-trigger map was the scale bottleneck (a 100 TB chunk is one
-    * task when staged as one file). Derived from the session's slots,
-    * never a constant: at low core counts this degrades to the old
-    * one-file shape. Decisions are chunking-invariant (spec-pinned),
+    * ([[graft.ts.Replay.source]] with `filesPerTrigger = subFiles`),
+    * so a trigger's read/map stage has one task PER FILE instead of one
+    * task per batch — the serial per-trigger map was the scale
+    * bottleneck (a 100 TB chunk is one task when staged as one file).
+    * Derived from the session's slots, never a constant: at low core
+    * counts this degrades to the old one-file shape. The bound is
+    * slots / nChunks tasks per trigger, not the session's slots (4 of
+    * 32 at 8 chunks). Decisions are chunking-invariant (spec-pinned),
     * so grouping k range files per trigger preserves the doc_id-ordered
     * replay contract as long as every batch is a contiguous id range —
     * which consecutive range files are by construction. */
@@ -58,25 +54,16 @@ object StreamDedup {
     math.max(1, spark.sparkContext.defaultParallelism / math.max(1, nChunks))
 
   /** Range-stages `df` (already keyed by ascending `doc_id`) as
-    * `nChunks` doc_id-contiguous chunk groups of `sub` files each and
-    * stamps ascending mtimes in range order, so `maxFilesPerTrigger =
-    * sub` replays exactly the chunk groups: batch i = files
-    * [i*sub, (i+1)*sub) = one contiguous doc_id range. Empty range
+    * `nChunks` doc_id-contiguous chunk groups of `sub` files each, so
+    * `sub` files per trigger replay exactly the chunk groups: batch i =
+    * files [i*sub, (i+1)*sub) = one contiguous doc_id range. Empty range
     * partitions write no file; consecutive grouping stays contiguous
     * regardless, so a short tail group only shifts batch boundaries,
     * never id order. */
   private def stageRangeChunks(df: DataFrame, srcStage: String,
-      nChunks: Int, sub: Int): Unit = {
-    df.repartitionByRange(nChunks * sub, col("doc_id"))
-      .write.mode("overwrite").parquet(srcStage)
-    val files = new java.io.File(srcStage).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    require(files.nonEmpty && files.length <= nChunks * sub,
-      s"staging produced ${files.length} files for $nChunks chunks x $sub")
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(1000000000000L + i * 60000L)
-    }
-  }
+      nChunks: Int, sub: Int): Unit =
+    require(graft.ts.Replay.stage(df, srcStage, nChunks, Seq(col("doc_id")), sub).nonEmpty,
+      s"staging produced no files for $nChunks chunks x $sub")
 
   /** First-arrival winners per fingerprint over a staged file stream:
     * `(fp, doc_id)`. `srcStage` files replay `subFiles` per
@@ -86,9 +73,7 @@ object StreamDedup {
   private def runDedup(spark: SparkSession, srcStage: String,
       subFiles: Int): DataFrame = {
     import spark.implicits._
-    val out = spark.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", subFiles.toString)
-      .parquet(srcStage)
+    val out = graft.ts.Replay.source(spark, stagedSchema, srcStage, subFiles)
       .as[(Long, String)]
       .groupByKey(_._2)
       .flatMapGroupsWithState(
@@ -107,19 +92,8 @@ object StreamDedup {
       }
       .toDF("fp", "doc_id")
     val sinkDir = graft.Scratch.dir("graft_sdedup_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastStateMetrics = q.recentProgress.reverseIterator
-      .flatMap(_.stateOperators.headOption)
-      .map(so => (so.numRowsTotal, so.memoryUsedBytes))
-      .nextOption()
-    spark.read.parquet(sinkDir)
+    graft.ts.Replay.runToParquet(out, sinkDir)
+    graft.ts.Replay.readSink(spark, sinkDir, out.schema)
   }
 
   /**
@@ -133,10 +107,7 @@ object StreamDedup {
       spark: SparkSession, dir: String, nChunks: Int = 8,
       useRocksDb: Boolean = false): DataFrame =
       graft.ts.Compaction.withStatePartitions(spark, 8) {
-      graft.ts.Compaction.withConf(spark,
-        "spark.sql.streaming.stateStore.providerClass",
-        if (useRocksDb) RocksDbProvider
-        else spark.conf.get("spark.sql.streaming.stateStore.providerClass")) {
+      graft.ts.Replay.withStateStore(spark, useRocksDb) {
     val docs = Text.loadDocuments(spark, dir)
     val srcStage = graft.Scratch.dir("graft_sdedup_src_").resolve("stage").toString
     val sub = subFilesPerChunk(spark, nChunks)
@@ -229,9 +200,7 @@ object StreamDedup {
   private def runGate(spark: SparkSession, srcStage: String,
       subFiles: Int): DataFrame = {
     import spark.implicits._
-    val out = spark.readStream.schema(gateSchema)
-      .option("maxFilesPerTrigger", subFiles.toString)
-      .parquet(srcStage)
+    val out = graft.ts.Replay.source(spark, gateSchema, srcStage, subFiles)
       .as[(Long, Int, String)]
       .groupByKey(r => (r._2, r._3))
       .flatMapGroupsWithState(
@@ -249,15 +218,8 @@ object StreamDedup {
       }
       .toDF("doc_id", "band", "clash")
     val sinkDir = graft.Scratch.dir("graft_sgate_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(sinkDir)
+    graft.ts.Replay.runToParquet(out, sinkDir)
+    graft.ts.Replay.readSink(spark, sinkDir, out.schema)
       .groupBy(col("doc_id"))
       .agg(sum(col("clash")).as("n_clash"))
       .select(col("doc_id"), col("n_clash"),
@@ -271,10 +233,7 @@ object StreamDedup {
       numHashes: Int = 16, bandRows: Int = 4,
       useRocksDb: Boolean = false): DataFrame =
       graft.ts.Compaction.withStatePartitions(spark, 8) {
-      graft.ts.Compaction.withConf(spark,
-        "spark.sql.streaming.stateStore.providerClass",
-        if (useRocksDb) RocksDbProvider
-        else spark.conf.get("spark.sql.streaming.stateStore.providerClass")) {
+      graft.ts.Replay.withStateStore(spark, useRocksDb) {
     val docs = Text.loadDocuments(spark, dir)
     val srcStage = graft.Scratch.dir("graft_sgate_src_").resolve("stage").toString
     val sub = subFilesPerChunk(spark, nChunks)

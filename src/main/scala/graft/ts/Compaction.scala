@@ -395,22 +395,15 @@ object Compaction {
   private[ts] def runToLogSink(
       streaming: DataFrame, outputMode: String, sinkDir: String,
       compactEvery: Int = 0, keyCols: Seq[String] = Seq("series", "ts")): DataFrame = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val q = streaming
-      .writeStream.outputMode(outputMode)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(sinkDir)
-        // opt-in periodic maintenance (between batches, same
-        // single-writer discipline): fold the log to current winners so
-        // read-side resolution stays O(dest) on long-lived streams
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactLog(batch.sparkSession, sinkDir, keyCols)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.run(streaming, outputMode) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(sinkDir)
+      // opt-in periodic maintenance (between batches, same
+      // single-writer discipline): fold the log to current winners so
+      // read-side resolution stays O(dest) on long-lived streams
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        compactLog(batch.sparkSession, sinkDir, keyCols)
+    }
     streaming.sparkSession.read.parquet(sinkDir)
   }
 
@@ -568,7 +561,7 @@ object Compaction {
    * (tsdb.c:621-668) at micro-batch granularity.
    *
    * The source is staged into `nChunks` files replayed one per
-   * micro-batch (`maxFilesPerTrigger=1`). By default chunks are TS
+   * micro-batch ([[Replay]]). By default chunks are TS
    * RANGES — the realistic mostly-in-order arrival, under which each
    * batch recomputes only its own new buckets and total work ≈ one full
    * materialization. `oooSplit=true` stages hash-split chunks instead,
@@ -592,7 +585,6 @@ object Compaction {
     // frame — its per-shuffle stage barriers add latency with nothing
     // left to re-decide.
     require(rule.agg == "twa", "non-TWA rules use streamingDownsampleAll")
-    import org.apache.spark.sql.{Dataset, Row}
     val srcStage = s"$workDir/stage"
     val srcLog = s"$workDir/log"
     val destLog = s"$workDir/dest"
@@ -609,61 +601,44 @@ object Compaction {
       }
     // ONE staging job: range-partition by chunk id (values 0..n-1 map
     // monotonically to part-00000..n files) instead of n filtered
-    // full-source scans; file mtimes are then stamped in chunk order so
-    // the file source replays them as intended (it orders by mtime).
+    // full-source scans; Replay stamps the files in chunk order.
     // (series, ts) trail the range key: sampling over the 0..n-1 chunk
     // ids ALONE has too few distinct values and can merge two ids into
     // one partition (ADVICE r05 — observed at nChunks=5 on the small
     // fixture); with the fine-grained tail the sampler always finds n
-    // distinct cut points, and __c leading keeps files chunk-ordered.
+    // distinct cut points, and the chunk id leading keeps files
+    // chunk-ordered.
     // Chunk boundaries are APPROXIMATE (ADVICE r06): sampled range
     // bounds can land mid-chunk, so file i may carry a fringe of the
     // adjacent chunk's rows — the nChunks check below catches merged
     // ids, not fringes. Replay correctness doesn't care (the spec pins
     // split-independence); only per-file accounting is approximate.
-    samples.withColumn("__c", chunkOf)
-      .repartitionByRange(nChunks, col("__c"), col("series"), col("ts"))
-      .drop("__c") // staging column must not leak into the staged files
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      // the range partitioner's SAMPLED bounds could merge two chunk
-      // ids into one file (ADVICE r05) — then replay granularity, and
-      // any per-batch accounting derived from it (ScaleProbe divides by
-      // nChunks), silently shrinks; fail loudly instead
-      require(files.length == nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks " +
-          s"(range bounds merged chunk ids, or the source under $dir is too small)")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
+    val files = Replay.stage(samples, srcStage, nChunks,
+      Seq(chunkOf, col("series"), col("ts")))
+    // the range partitioner's SAMPLED bounds could merge two chunk ids
+    // into one file (ADVICE r05) — then replay granularity, and any
+    // per-batch accounting derived from it (ScaleProbe divides by
+    // nChunks), silently shrinks; fail loudly instead
+    require(files.length == nChunks,
+      s"staging produced ${files.length} files for $nChunks chunks " +
+        s"(range bounds merged chunk ids, or the source under $dir is too small)")
     val bkt = TSModel.bucketStart(col("ts"), rule.bucketMs, rule.alignMs)
-    val q = spark.readStream.schema(sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.withColumn("__bkt", bkt)
-          .write.mode("append").partitionBy("__bkt").parquet(srcLog)
-        // this batch's OWN buckets, as literal partition filters on the
-        // source log (all of a bucket's samples so far live under its
-        // __bkt= directory, whichever batch appended them)
-        val bucketLits = batch.select(bkt.as("__b")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        bucketPartials(prunedLogRead(spark, srcLog, bucketLits), rule)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(destLog)
-        // opt-in periodic log fold (the [[compactLog]] contract the doc
-        // above describes), exercised mid-stream by CompactLogSpec
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactLog(spark, destLog, Seq("series", "bucket"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.run(Replay.source(spark, sampleSchema, srcStage)) { (batch, batchId) =>
+      batch.withColumn("__bkt", bkt)
+        .write.mode("append").partitionBy("__bkt").parquet(srcLog)
+      // this batch's OWN buckets, as literal partition filters on the
+      // source log (all of a bucket's samples so far live under its
+      // __bkt= directory, whichever batch appended them)
+      val bucketLits = batch.select(bkt.as("__b")).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      bucketPartials(prunedLogRead(spark, srcLog, bucketLits), rule)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(destLog)
+      // opt-in periodic log fold (the [[compactLog]] contract the doc
+      // above describes), exercised mid-stream by CompactLogSpec
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        compactLog(spark, destLog, Seq("series", "bucket"))
+    }
     // lazy guard rides INSIDE the resolution, before the in-flight
     // bucket filter — so every bucket's ts is range-checked, including
     // each series' newest (ADVICE r17: the post-filter wrap silently

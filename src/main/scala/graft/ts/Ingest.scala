@@ -2,7 +2,6 @@ package graft.ts
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /**
@@ -172,29 +171,23 @@ object Ingest {
   private def runIngest(
       spark: SparkSession, stream: DataFrame, sinkDir: String, dupPolicy: String,
       ignoreMaxTimeDiff: Long, ignoreMaxValDiff: Double): DataFrame = {
-    import org.apache.spark.sql.Dataset
     var tail: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], tailSchema)
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val combined = processBatch(
-          batch, tail, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
-          .localCheckpoint()
-        combined.filter(!col("is_tail"))
-          .select(col("series"), col("ts"), col("value"), col("seq"),
-            lit(batchId).as("batch_id"))
-          .write.mode("append").parquet(sinkDir)
-        val newTail = combined.filter(col("is_tail"))
-          .select(col("series"), col("ts").as("lastTs"), col("value").as("lastValue"))
-        tail = tail
-          .join(newTail.select(col("series")), Seq("series"), "left_anti")
-          .unionByName(newTail)
-          .localCheckpoint()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.run(stream) { (batch, batchId) =>
+      val combined = processBatch(
+        batch, tail, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
+        .localCheckpoint()
+      combined.filter(!col("is_tail"))
+        .select(col("series"), col("ts"), col("value"), col("seq"),
+          lit(batchId).as("batch_id"))
+        .write.mode("append").parquet(sinkDir)
+      val newTail = combined.filter(col("is_tail"))
+        .select(col("series"), col("ts").as("lastTs"), col("value").as("lastValue"))
+      tail = tail
+        .join(newTail.select(col("series")), Seq("series"), "left_anti")
+        .unionByName(newTail)
+        .localCheckpoint()
+    }
     resolveSink(spark.read.parquet(sinkDir), dupPolicy)
   }
 
@@ -202,17 +195,14 @@ object Ingest {
     * through the merge-on-read sink: every batch's emissions append to
     * `sinkDir` stamped with the batch id; the read side resolves each
     * (series, ts) by the duplicate policy over (batch_id, seq) order.
-    * `maxFilesPerTrigger=1` forces one micro-batch per file so
-    * cross-batch state is really exercised. */
+    * One micro-batch per file ([[Replay.source]]) so cross-batch state
+    * is really exercised. */
   def streamingIngestOnce(
       spark: SparkSession, srcDir: String, sinkDir: String, dupPolicy: String,
       ignoreMaxTimeDiff: Long = 0L, ignoreMaxValDiff: Double = 0.0): DataFrame =
       Compaction.withStatePartitions(spark, 8) {
-    val src = spark.readStream
-      .schema(Compaction.sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    runIngest(spark, src, sinkDir, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
+    runIngest(spark, Replay.source(spark, Compaction.sampleSchema, srcDir),
+      sinkDir, dupPolicy, ignoreMaxTimeDiff, ignoreMaxValDiff)
   }
 
   /** The events fixture replayed through the streaming ingest with the

@@ -156,32 +156,15 @@ object SketchStore {
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
     val srcStage = graft.Scratch.dir("graft_sketch_src_").resolve("stage").toString
-    s.repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
+    Replay.stage(s, srcStage, nChunks, Seq(col("ts")))
+    Replay.run(Replay.source(spark, Compaction.sampleSchema, srcStage)) { (batch, _) =>
+      // first batch bootstraps; later ones fold in — identical state
+      // evolution to a driver-side bootstrap + merge chain
+      if (graft.pipeline.IncrementalAdmit.currentVersion(spark, stateDir).isEmpty)
+        writeSketchVersioned(spark, batch, stateDir, gamma, signed)
+      else
+        mergeSketch(spark, batch, stateDir, gamma)
     }
-    val qy = spark.readStream
-      .schema(Compaction.sampleSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // first batch bootstraps; later ones fold in — identical state
-        // evolution to a driver-side bootstrap + merge chain
-        if (graft.pipeline.IncrementalAdmit.currentVersion(spark, stateDir).isEmpty)
-          writeSketchVersioned(spark, batch.toDF(), stateDir, gamma, signed)
-        else
-          mergeSketch(spark, batch.toDF(), stateDir, gamma)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
     readSketch(spark, stateDir)
   }
 }

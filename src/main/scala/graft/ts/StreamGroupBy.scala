@@ -420,21 +420,7 @@ object StreamGroupBy {
       nChunks: Int = 4,
       chunkCol: org.apache.spark.sql.Column = col("ts")): DataFrame =
     Compaction.withStatePartitions(spark, 8) {
-      val srcStage = graft.Scratch.dir("graft_sgbtwa_src_").resolve("stage").toString
-      samples.select(col("series"), col("ts"), col("value"))
-        .repartitionByRange(nChunks, chunkCol)
-        .write.mode("overwrite").parquet(srcStage)
-      locally {
-        val files = new java.io.File(srcStage).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        files.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(1000000000000L + i * 60000L)
-        }
-      }
-      val schema = samples.select(
-        col("series"), col("ts"), col("value")).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcStage)
+      val stream = stageChunks(spark, samples, "graft_sgbtwa_src_", nChunks, chunkCol)
       val streamed = mrangeGroupByTwaPartialsStream(
         stream, seriesToGroup, bucketMs, 0L, fromMs, toMs)
       val sinkDir = graft.Scratch.dir("graft_sgbtwa_snk_").resolve("log").toString
@@ -442,6 +428,18 @@ object StreamGroupBy {
       mrangeGroupByTwaResolve(
         log, seriesToGroup, groupByLabel, reducer, bucketMs, fromMs, toMs)
     }
+
+  /** Stage `(series, ts, value)` of `samples` as `nChunks` replay files
+    * partitioned by `chunkCol` and return the one-file-per-trigger
+    * stream over them. */
+  private def stageChunks(spark: SparkSession, samples: DataFrame,
+      prefix: String, nChunks: Int,
+      chunkCol: org.apache.spark.sql.Column): DataFrame = {
+    val staged = samples.select(col("series"), col("ts"), col("value"))
+    val srcStage = graft.Scratch.dir(prefix).resolve("stage").toString
+    Replay.stage(staged, srcStage, nChunks, Seq(chunkCol))
+    Replay.source(spark, staged.schema, srcStage)
+  }
 
   /** Spec-facing chunked replay: stage an arbitrary samples frame as
     * `nChunks` mtime-ordered files (partitioned by `chunkCol` —
@@ -468,21 +466,7 @@ object StreamGroupBy {
       nChunks: Int = 4,
       chunkCol: org.apache.spark.sql.Column = col("ts")): DataFrame =
     Compaction.withStatePartitions(spark, 8) {
-      val srcStage = graft.Scratch.dir("graft_sgb_src_").resolve("stage").toString
-      samples.select(col("series"), col("ts"), col("value"))
-        .repartitionByRange(nChunks, chunkCol)
-        .write.mode("overwrite").parquet(srcStage)
-      locally {
-        val files = new java.io.File(srcStage).listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        files.zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(1000000000000L + i * 60000L)
-        }
-      }
-      val schema = samples.select(
-        col("series"), col("ts"), col("value")).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcStage)
+      val stream = stageChunks(spark, samples, "graft_sgb_src_", nChunks, chunkCol)
       val streamed = mrangeGroupByStreamMulti(stream, seriesToGroup,
         groupByLabel, aggs, reducer, bucketMs, 0L, fromMs, toMs)
       val sinkDir = graft.Scratch.dir("graft_sgb_snk_").resolve("log").toString

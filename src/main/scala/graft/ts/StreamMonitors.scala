@@ -1,8 +1,8 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Multi-monitor streaming pass — ONE stateful stream serving several
@@ -12,16 +12,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * accumulator and emits tagged alerts. This operator is that shape
  * for the series-keyed monitor family:
  *
- *  - prefix z-score anomaly ([[StreamAnomaly.zscoreStreamOnce]]),
- *  - CUSUM drift ([[StreamAnomaly.cusumStreamOnce]]),
- *  - rolling quantile ([[StreamAnomaly.rollingQuantileStreamOnce]]),
- *  - gap detection ([[StreamSessions.gapsStreamOnce]]),
- *  - seasonal cohort anomaly ([[StreamAnomaly.seasonalStreamOnce]] —
- *    its (series, season) key folds INTO the per-series state as a
- *    bounded cohort map, ≤24 entries; the per-cohort subsequence of
- *    the series' (ts, value)-ordered replay is itself (ts, value)-
- *    ordered, so the cohort Welford evolution is the individual
- *    operator's exactly),
+ *  - prefix z-score anomaly ([[zscoreSlice]]; oracle
+ *    [[StreamAnomaly.zscoreStreamSql]]) — a Welford (n, mean, M2)
+ *    prefix, so a constant prefix has σ exactly 0 like the oracle's
+ *    stddev_pop (the naive sumsq/n − μ² form can leave a tiny positive
+ *    σ there and fire a spurious huge-z alert),
+ *  - CUSUM drift ([[cusumSlice]]; [[StreamAnomaly.cusumStreamSql]]),
+ *  - rolling quantile ([[rollingSlice]]; [[Rolling.rollingQuantileSql]]
+ *    — a span-deep ring, NOT the whole history, emitting the exact
+ *    interpolated quantile of each arrival's trailing window),
+ *  - gap detection ([[gapsSlice]]; [[Sessions.gapsSql]] — a gap is
+ *    reported when the CLOSING sample arrives; NaN arrivals count and
+ *    a duplicate ts yields diff 0, which never exceeds the threshold),
+ *  - seasonal cohort anomaly ([[seasonalSlice]];
+ *    [[StreamAnomaly.seasonalStreamSql]] — its (series, season) key
+ *    folds INTO the per-series state as a bounded cohort map, ≤24
+ *    entries; the per-cohort subsequence of the series' (ts, value)-
+ *    ordered replay is itself (ts, value)-ordered, so the cohort
+ *    Welford evolution is the cohort-keyed closed form's exactly),
  *  - Hampel outlier filter ([[Rolling.hampel]]'s streaming twin,
  *    enabled when `hampelSpan > 0`: a (2·span+1)-deep ring of
  *    (ts, value) rows in replay order; once span+1 rows are buffered,
@@ -57,11 +65,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *    `closedOnly`). Bucket arithmetic replicates the batch operator
  *    bit-for-bit: `floor(round9(ln v / ln γ))`),
  *
- * whose transitions are deliberately IDENTICAL to the individual
- * operators' (the z-score and CUSUM monitors share one Welford
- * prefix, exactly the arithmetic each runs alone; the spec pins each
- * extracted slice bit-equal to its one-shot twin). The native
- * session_window operator cannot fold here (engine-managed state).
+ * The z-score and CUSUM monitors share one Welford prefix. Each slice
+ * equals its monitor's closed form (StreamAnomalySpec and
+ * StreamSessionsSpec pin every slice against a Spark-window or batch
+ * derivation of it). The native session_window operator cannot fold
+ * here (engine-managed state): [[StreamSessions]] runs it alone.
  *
  * Output: tagged union `(op, series, ts, value, score, l1, d1)` with
  * op ∈ z|c|r|g|s|b|h|d; [[zscoreSlice]]/[[cusumSlice]]/[[rollingSlice]]/
@@ -77,8 +85,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * ring + one long + a ≤period-bounded cohort map + a ≤longMs/hopMs
  * pending-window map + an open-window sketch map (≈ log_γ buckets) —
  * constants; one shuffle by series for N monitors instead of N; the
- * replay/staging discipline (time-ordered chunks, one file per
- * trigger) is the family's.
+ * replay is [[Replay]]'s (time-ordered chunks, one file per trigger).
  *
  * The per-session CACHE exists because the bench/verify harness runs
  * each monitor as its own query: the first slice materializes the
@@ -90,6 +97,9 @@ object StreamMonitors {
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+  private val StagedSchema =
+    Compaction.sampleSchema.add("season", org.apache.spark.sql.types.LongType)
 
   /** Test hook: drop every cached pass (a fresh SparkSession in the
     * same JVM must not read sinks of a stopped one). */
@@ -153,9 +163,7 @@ object StreamMonitors {
       // state-store commit overhead still outweighs monitor-compute
       // parallelism, so the r14 setting stands
       Compaction.withStatePartitions(spark, 8) {
-      Compaction.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-        if (useRocksDb) graft.pipeline.StreamDedup.RocksDbProvider
-        else spark.conf.get("spark.sql.streaming.stateStore.providerClass")) {
+      Replay.withStateStore(spark, useRocksDb) {
     require(q >= 0 && q <= 1 && span > 0, "rolling quantile params")
     require(gapThresholdMs > 0, "gap threshold must be positive")
     val hampelOn = hampelSpan > 0
@@ -176,37 +184,16 @@ object StreamMonitors {
     import spark.implicits._
     // NaN rows stay: the gap monitor counts presence; the value
     // monitors skip them inside the fold (same surviving sequence as
-    // their individually-filtered twins)
+    // their NaN-filtered closed forms)
     var s = samples
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
     val srcStage = graft.Scratch.dir("graft_smon_src_").resolve("stage").toString
-    Seasonal.withSeason(s.select(col("series"), col("ts"), col("value")),
-        seasonalMode)
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      require(files.length <= nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
+    Replay.stage(Seasonal.withSeason(
+        s.select(col("series"), col("ts"), col("value")), seasonalMode),
+      srcStage, nChunks, Seq(col("ts")))
     val minPrefix = StreamAnomaly.MinPrefix
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("season",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    val out = Replay.source(spark, StagedSchema, srcStage)
       .as[(String, Long, Double, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
@@ -362,21 +349,11 @@ object StreamMonitors {
       }
       .toDF("op", "series", "ts", "value", "score", "l1", "d1")
     val sinkDir = graft.Scratch.dir("graft_smon_").resolve("out").toString
-    val qy = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    qy.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
+    Replay.runToParquet(out, sinkDir)
+    Replay.readSink(spark, sinkDir, out.schema)
   } }
 
-  /** The z-score monitor's slice — [[StreamAnomaly.zscoreStreamOnce]]'s
+  /** The z-score monitor's slice — [[StreamAnomaly.zscoreStreamSql]]'s
     * exact schema. */
   def zscoreSlice(shared: DataFrame): DataFrame =
     shared.filter(col("op") === "z")
@@ -399,7 +376,7 @@ object StreamMonitors {
         (col("l1") - col("ts")).as("gap_ms"))
 
   /** The seasonal cohort monitor's slice —
-    * [[StreamAnomaly.seasonalStreamOnce]]'s exact schema. */
+    * [[StreamAnomaly.seasonalStreamSql]]'s exact schema. */
   def seasonalSlice(shared: DataFrame): DataFrame =
     shared.filter(col("op") === "s")
       .select(col("series"), col("ts"), col("value"),

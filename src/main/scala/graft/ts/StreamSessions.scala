@@ -1,8 +1,7 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Streaming session windows — the ONLINE twin of [[Sessions.sessionRange]]
@@ -58,15 +57,15 @@ object StreamSessions {
       fromMs: Option[Long] = None, toMs: Option[Long] = None,
       nChunks: Int = 8, useRocksDb: Boolean = false): DataFrame =
       Compaction.withStatePartitions(spark, 8) {
-      withSessionProvider(spark, useRocksDb) {
+      Replay.withStateStore(spark, useRocksDb) {
     require(gapMs > 0, "session gap must be positive")
+    import spark.implicits._
     var s = samples
     fromMs.foreach(f => s = s.filter(col("ts") >= f))
     toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val staged = s.select(col("series"), col("ts"), col("value"))
     val srcStage = graft.Scratch.dir("graft_ssess_src_").resolve("stage").toString
-    staged.repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
+    val data = Replay.stage(s.select(col("series"), col("ts"), col("value")),
+      srcStage, nChunks, Seq(col("ts")))
     // the sentinel must outrun every real session's end + gap. Read
     // max(ts) off the STAGED files with parquet aggregate pushdown —
     // footer statistics only — instead of a second full scan of the
@@ -79,39 +78,15 @@ object StreamSessions {
         case r                  => r.getLong(0)
       }
     }
-    def partFiles() = new java.io.File(srcStage).listFiles()
-      .filter(_.getName.startsWith("part-"))
-    val dataNames = partFiles().map(_.getName).toSet
     val sentinelTs = maxTs + 2 * gapMs + 86400000L
-    Seq((Sentinel, sentinelTs, 0.0)).toDF2(spark)
+    Seq((Sentinel, sentinelTs, 0.0)).toDF("series", "ts", "value")
       .write.mode("append").parquet(srcStage)
-    locally {
-      // mtime order = replay order: data chunks in ts order (their
-      // part numbers follow the range partitioning), sentinel LAST —
-      // it must not advance the watermark before real data plays.
-      val files = partFiles()
-      // <=, not ==: repartitionByRange on a tiny/empty in-range frame
-      // legally emits fewer than nChunks part files (empty partitions
-      // write nothing); mtime ordering only needs the files that exist.
-      require(files.length <= nChunks + 1,
-        s"staging produced ${files.length} files for $nChunks chunks + sentinel")
-      val (data, sentinel) = files.partition(f => dataNames(f.getName))
-      data.sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-      sentinel.foreach(
-        _.setLastModified(1000000000000L + files.length * 60000L))
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
+    // mtime order = replay order: data chunks in ts order, sentinel
+    // LAST — it must not advance the watermark before real data plays
+    val dataNames = data.map(_.getName).toSet
+    Replay.stamp(Replay.partFiles(srcStage).filterNot(f => dataNames(f.getName)),
+      from = data.length)
+    val out = Replay.source(spark, Compaction.sampleSchema, srcStage)
       .withColumn("event_time", timestamp_millis(col("ts")))
       .withWatermark("event_time", "0 milliseconds")
       .groupBy(col("series"),
@@ -123,119 +98,8 @@ object StreamSessions {
         Aggs.expr(agg, col("value"), col("ts")))
       .drop("session_window")
     val sinkDir = graft.Scratch.dir("graft_ssess_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    val res =
-      if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
-    res.filter(col("series") =!= Sentinel)
+    Replay.runToParquet(out, sinkDir)
+    Replay.readSink(spark, sinkDir, out.schema)
+      .filter(col("series") =!= Sentinel)
   } }
-
-  /**
-   * Streaming gap detection — the ONLINE twin of [[Sessions.gaps]]:
-   * an inter-arrival gap > `thresholdMs` is reported the moment the
-   * CLOSING sample arrives (the page fires when the pipe comes back —
-   * detecting a still-open outage needs a timeout clock, which the
-   * batch contract by construction doesn't have either: it only ever
-   * sees bracketed gaps). State per series is ONE long (last arrival
-   * ts); presence semantics as in batch — NaN arrivals count, a
-   * duplicate ts yields diff 0 which can never exceed a positive
-   * threshold, so no distinct pass is needed.
-   *
-   * Output `(series, gap_start, gap_end, gap_ms)` — identical to the
-   * batch operator, so [[Sessions.gapsSql]] is the shared oracle.
-   */
-  def gapsStreamOnce(
-      spark: SparkSession, samples: DataFrame, thresholdMs: Long,
-      fromMs: Option[Long] = None, toMs: Option[Long] = None,
-      nChunks: Int = 8, useRocksDb: Boolean = false): DataFrame =
-      Compaction.withStatePartitions(spark, 8) {
-      withSessionProvider(spark, useRocksDb) {
-    require(thresholdMs > 0, "gap threshold must be positive")
-    import spark.implicits._
-    var s = samples
-    fromMs.foreach(f => s = s.filter(col("ts") >= f))
-    toMs.foreach(t => s = s.filter(col("ts") <= t))
-    val srcStage = graft.Scratch.dir("graft_sgaps_src_").resolve("stage").toString
-    s.select(col("series"), col("ts"))
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcStage)
-    locally {
-      val files = new java.io.File(srcStage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      // <= (see sessionStreamOnce): a near-empty in-range input can
-      // stage fewer part files than nChunks; the batch twin returns an
-      // empty frame for the same input, so must we.
-      require(files.length <= nChunks,
-        s"staging produced ${files.length} files for $nChunks chunks")
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1000000000000L + i * 60000L)
-      }
-    }
-    val out = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcStage)
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (series: String, rows: Iterator[(String, Long)],
-         state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-          val ordered = rows.map(_._2).toArray.sorted
-          var last = state.getOption.getOrElse(Long.MinValue)
-          val gaps = Array.newBuilder[(String, Long, Long, Long)]
-          ordered.foreach { t =>
-            if (last != Long.MinValue && t - last > thresholdMs)
-              gaps += ((series, last, t, t - last))
-            if (t > last) last = t
-          }
-          if (last != Long.MinValue) state.update(last)
-          gaps.result().iterator
-      }
-      .toDF("series", "gap_start", "gap_end", "gap_ms")
-    val sinkDir = graft.Scratch.dir("graft_sgaps_").resolve("out").toString
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val parts = Option(new java.io.File(sinkDir).listFiles())
-      .getOrElse(Array.empty).exists(_.getName.startsWith("part-"))
-    if (parts) spark.read.schema(out.schema).parquet(sinkDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out.schema)
-  } }
-
-  /** Session-window state lives in the session-window store; provider
-    * choice is semantics-free, mirrored from [[StreamAnomaly]]. */
-  private def withSessionProvider[T](
-      spark: SparkSession, useRocksDb: Boolean)(body: => T): T =
-    Compaction.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      if (useRocksDb) graft.pipeline.StreamDedup.RocksDbProvider
-      else spark.conf.get("spark.sql.streaming.stateStore.providerClass"))(body)
-
-  /** Tiny local-Seq → DataFrame helper that avoids importing implicits
-    * at the call site (the staging sentinel is the only user). */
-  private implicit class SeqToDf(rows: Seq[(String, Long, Double)]) {
-    def toDF2(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      rows.toDF("series", "ts", "value")
-    }
-  }
 }

@@ -320,14 +320,7 @@ object Tsbs {
     val base = graft.Scratch.dir("graft_tsbs_ingest_")
     val srcDir = base.resolve("src").toString
     val sinkDir = base.resolve("sink").toString
-    cpuSamples(spark, sfDir)
-      .repartitionByRange(nChunks, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    val files = new java.io.File(srcDir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(1000000000000L + i * 60000L)
-    }
+    Replay.stage(cpuSamples(spark, sfDir), srcDir, nChunks, Seq(col("ts")))
     Ingest.streamingIngestOnce(spark, srcDir, sinkDir, "MAX")
   }
 

@@ -1,15 +1,120 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ts.{Changepoint, StreamAnomaly}
+import graft.ts.{Changepoint, StreamAnomaly, StreamMonitors}
 
-/** Streaming prefix z-score + CUSUM change detection: planted-anomaly
-  * closed forms and the streaming==batch-window equivalence that the
-  * oracle entries hash-check at fixture scale. */
+/** The streaming prefix z-score, CUSUM, seasonal and rolling-quantile
+  * monitors, run through [[StreamMonitors]]' shared pass: planted-
+  * anomaly closed forms, and each slice == the cumulative-window
+  * closed form that the oracle entries hash-check at fixture scale. */
 class StreamAnomalySpec extends AnyFunSuite {
   import SparkTest._
   import spark.implicits._
+
+  private val T0 = 1704067200000L
+  private val T31 = 1706745599999L
+  private val DAY = 86400000L
+
+  /** One shared pass; every monitor not under test gets an inert
+    * threshold (99 sigma, a year-long gap). */
+  private def pass(df: DataFrame, nChunks: Int, z: Double = 99.0,
+      cusum: Double = 99.0, q: Double = 0.5, span: Int = 3,
+      gapMs: Long = 365 * DAY, seasonal: Double = 99.0,
+      fromMs: Option[Long] = None, toMs: Option[Long] = None,
+      useRocksDb: Boolean = false): DataFrame =
+    StreamMonitors.monitorsOnce(spark, df, zThreshold = z,
+      cusumThreshold = cusum, q = q, span = span, gapThresholdMs = gapMs,
+      seasonalThreshold = seasonal, seasonalMode = "dow",
+      fromMs = fromMs, toMs = toMs, nChunks = nChunks,
+      useRocksDb = useRocksDb, cacheKey = None)
+
+  /** One fixture-month pass with every value monitor armed, shared by
+    * the closed-form and provider-parity tests below. */
+  private def fixturePass(useRocksDb: Boolean) =
+    pass(graft.ts.TSModel.samples(spark, sf), nChunks = 6, z = 2.0,
+      cusum = 2.0, q = 0.9, span = 7, seasonal = 1.5,
+      fromMs = Some(T0), toMs = Some(T31), useRocksDb = useRocksDb)
+  private lazy val fixtureDefault = fixturePass(useRocksDb = false)
+  private lazy val fixtureRocks = fixturePass(useRocksDb = true)
+
+  private def month = graft.ts.TSModel.samples(spark, sf)
+    .filter(!isnan(col("value")))
+    .filter(col("ts") >= T0 && col("ts") <= T31)
+
+  private def prefix(keys: Column*) = Window.partitionBy(keys: _*)
+    .orderBy(col("ts"), col("value"))
+    .rowsBetween(Window.unboundedPreceding, -1)
+
+  /** Closed form of the z-score monitor over the fixture month:
+    * (series, ts) -> z. */
+  private def zscoreClosed(threshold: Double): Map[(String, Long), Double] = {
+    val w = prefix(col("series"))
+    month
+      .withColumn("mu", avg(col("value")).over(w))
+      .withColumn("sigma", stddev_pop(col("value")).over(w))
+      .withColumn("n", count(lit(1)).over(w))
+      .filter(col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
+      .withColumn("z", (col("value") - col("mu")) / col("sigma"))
+      .filter(abs(col("z")) >= threshold)
+      .collect().map(r => ((r.getAs[String]("series"), r.getAs[Long]("ts")),
+        r.getAs[Double]("z"))).toMap
+  }
+
+  /** Closed form of the CUSUM monitor: prefix stats, then a running
+    * sum over the derived per-row terms — the same two stacked windows
+    * as the oracle SQL. */
+  private def cusumClosed(threshold: Double): Map[(String, Long), Double] = {
+    val wPre = prefix(col("series"))
+    val wCum = Window.partitionBy(col("series")).orderBy(col("ts"), col("value"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    month
+      .withColumn("mu", avg(col("value")).over(wPre))
+      .withColumn("sigma", stddev_pop(col("value")).over(wPre))
+      .withColumn("n", count(lit(1)).over(wPre))
+      .withColumn("scored",
+        col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
+      .withColumn("term",
+        when(col("scored"), (col("value") - col("mu")) / col("sigma"))
+          .otherwise(lit(0.0)))
+      .withColumn("cs", sum(col("term")).over(wCum))
+      .filter(col("scored") && abs(col("cs")) >= threshold)
+      .collect().map(r => ((r.getAs[String]("series"), r.getAs[Long]("ts")),
+        r.getAs[Double]("cs"))).toMap
+  }
+
+  /** Closed form of the seasonal monitor: prefix stats per (series,
+    * dow cohort). */
+  private def seasonalClosed(threshold: Double): Map[(String, Long), Double] = {
+    val w = prefix(col("series"), col("season"))
+    month
+      .withColumn("season", pmod(floor(col("ts") / DAY).cast("long") + 3L, lit(7L)))
+      .withColumn("mu", avg(col("value")).over(w))
+      .withColumn("sigma", stddev_pop(col("value")).over(w))
+      .withColumn("n", count(lit(1)).over(w))
+      .filter(col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
+      .withColumn("s", (col("value") - col("mu")) / col("sigma"))
+      .filter(abs(col("s")) >= threshold)
+      .collect().map(r => ((r.getAs[String]("series"), r.getAs[Long]("ts")),
+        r.getAs[Double]("s"))).toMap
+  }
+
+  /** `(series, ts) -> score column` of a slice. */
+  private def scores(slice: DataFrame, scoreCol: String): Map[(String, Long), Double] =
+    slice.collect().map(r => ((r.getAs[String]("series"), r.getAs[Long]("ts")),
+      r.getAs[Double](scoreCol))).toMap
+
+  /** Same keys; scores equal up to summation-order ulps. */
+  private def assertClose(got: Map[(String, Long), Double],
+      exp: Map[(String, Long), Double], what: String): Unit = {
+    assert(got.keySet == exp.keySet, what)
+    got.foreach { case (k, v) =>
+      assert(math.abs(v - exp(k)) <= 1e-9 * math.max(1.0, math.abs(v)),
+        s"$what $k: $v vs ${exp(k)}")
+    }
+  }
 
   test("streaming zscore: planted spike fires once, at arrival, cross-batch") {
     // series 'a': 12 quiet samples then a spike at ts=12 (lands in a
@@ -20,7 +125,7 @@ class StreamAnomalySpec extends AnyFunSuite {
     val tail = (13L until 16L).map(t => ("a", t, (t % 3).toDouble))
     val rows = quiet ++ Seq(("a", 12L, 50.0)) ++ tail
     val df = rows.toDF("series", "ts", "value")
-    val out = StreamAnomaly.zscoreStreamOnce(spark, df, threshold = 3.0, nChunks = 4)
+    val out = StreamMonitors.zscoreSlice(pass(df, nChunks = 4, z = 3.0))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(3)))
     assert(out.map(t => (t._1, t._2)).toSeq == Seq(("a", 12L)))
     // prefix of the spike: 12 samples of 0,1,2 pattern — mu=1, sigma
@@ -32,54 +137,44 @@ class StreamAnomalySpec extends AnyFunSuite {
   test("streaming zscore: nothing fires before MinPrefix history exists") {
     // the FIRST sample is extreme, but with no prefix it cannot score
     val rows = Seq(("b", 0L, 999.0)) ++ (1L until 8L).map(t => ("b", t, (t % 2).toDouble))
-    val out = StreamAnomaly.zscoreStreamOnce(
-      spark, rows.toDF("series", "ts", "value"), threshold = 0.5, nChunks = 2)
+    val out = StreamMonitors.zscoreSlice(
+      pass(rows.toDF("series", "ts", "value"), nChunks = 2, z = 0.5))
       .collect()
     // the early extreme is IN the prefix of later samples, inflating
     // sigma — later quiet samples may or may not fire, but ts=0 never
     assert(!out.map(_.getLong(1)).contains(0L))
   }
 
-  test("shared multi-monitor pass: every slice == its individual one-shot twin") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L; val DAY = 86400000L
-    val samples = graft.ts.TSModel.samples(spark, SparkTest.sf)
-    def canon(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
-    val shared = graft.ts.StreamMonitors.monitorsOnce(spark, samples,
-      zThreshold = 2.5, cusumThreshold = 3.0, q = 0.5, span = 10,
-      gapThresholdMs = 2 * DAY, seasonalThreshold = 2.0, seasonalMode = "dow",
-      fromMs = Some(T0), toMs = Some(T31),
-      nChunks = 2, cacheKey = None)
-    assert(canon(graft.ts.StreamMonitors.zscoreSlice(shared)) ==
-      canon(StreamAnomaly.zscoreStreamOnce(spark, samples, 2.5,
-        Some(T0), Some(T31), nChunks = 2)), "zscore slice")
-    assert(canon(graft.ts.StreamMonitors.cusumSlice(shared)) ==
-      canon(StreamAnomaly.cusumStreamOnce(spark, samples, 3.0,
-        Some(T0), Some(T31), nChunks = 2)), "cusum slice")
-    assert(canon(graft.ts.StreamMonitors.rollingSlice(shared)) ==
-      canon(StreamAnomaly.rollingQuantileStreamOnce(spark, samples,
-        q = 0.5, span = 10, Some(T0), Some(T31), nChunks = 2)), "rolling slice")
-    assert(canon(graft.ts.StreamMonitors.gapsSlice(shared)) ==
-      canon(graft.ts.StreamSessions.gapsStreamOnce(spark, samples,
-        thresholdMs = 2 * DAY, Some(T0), Some(T31), nChunks = 2)), "gaps slice")
+  test("shared multi-monitor pass: every slice == its closed form") {
+    val samples = graft.ts.TSModel.samples(spark, sf)
+    val shared = pass(samples, nChunks = 2, z = 2.5, cusum = 3.0, q = 0.5,
+      span = 10, gapMs = 2 * DAY, seasonal = 2.0,
+      fromMs = Some(T0), toMs = Some(T31))
+    assertClose(scores(StreamMonitors.zscoreSlice(shared), "z_value"),
+      zscoreClosed(2.5), "zscore slice")
+    assertClose(scores(StreamMonitors.cusumSlice(shared), "cusum_score"),
+      cusumClosed(3.0), "cusum slice")
+    assertClose(scores(StreamMonitors.rollingSlice(shared), "rq_value"),
+      scores(graft.ts.Rolling.rollingQuantile(samples, 0.5, 10, Some(T0), Some(T31)),
+        "rq_value"), "rolling slice")
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    assert(rows(StreamMonitors.gapsSlice(shared)) ==
+      rows(graft.ts.Sessions.gaps(samples, 2 * DAY, Some(T0), Some(T31))), "gaps slice")
     // seasonal cohorts folded into per-series state: the (ts, value)-
     // ordered replay's per-cohort subsequence is itself ordered, so
-    // the cohort Welford evolution matches the individual operator
-    assert(canon(graft.ts.StreamMonitors.seasonalSlice(shared)) ==
-      canon(StreamAnomaly.seasonalStreamOnce(spark, samples, 2.0, "dow",
-        Some(T0), Some(T31), nChunks = 2)), "seasonal slice")
+    // the cohort Welford evolution matches the cohort-keyed closed form
+    assertClose(scores(StreamMonitors.seasonalSlice(shared), "s_value"),
+      seasonalClosed(2.0), "seasonal slice")
     // NaN presence: the gap monitor must count a NaN arrival (it
     // bridges the gap) while the value monitors skip it
-    val rows = Seq(("n", 0L, 1.0), ("n", 1L, 2.0), ("n", 5L, Double.NaN),
+    val nanRows = Seq(("n", 0L, 1.0), ("n", 1L, 2.0), ("n", 5L, Double.NaN),
       ("n", 9L, 3.0)).toDF("series", "ts", "value")
-    val sh2 = graft.ts.StreamMonitors.monitorsOnce(spark, rows,
-      zThreshold = 99.0, cusumThreshold = 99.0, q = 0.5, span = 3,
-      gapThresholdMs = 3L, seasonalThreshold = 99.0, seasonalMode = "dow",
-      nChunks = 1, cacheKey = None)
-    val gaps = graft.ts.StreamMonitors.gapsSlice(sh2).collect()
+    val sh2 = pass(nanRows, nChunks = 1, gapMs = 3L)
+    val gaps = StreamMonitors.gapsSlice(sh2).collect()
       .map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(gaps == Set((1L, 5L), (5L, 9L)),
       s"NaN arrival must bracket gaps at both sides: $gaps")
-    assert(graft.ts.StreamMonitors.rollingSlice(sh2).count() == 3,
+    assert(StreamMonitors.rollingSlice(sh2).count() == 3,
       "value monitors must skip the NaN row")
   }
 
@@ -182,69 +277,25 @@ class StreamAnomalySpec extends AnyFunSuite {
   }
 
   test("streaming zscore == the cumulative-window closed form on the fixture") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    val got = StreamAnomaly.zscoreStreamOnce(spark, samples, 2.0,
-        Some(T0), Some(T31), nChunks = 6)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // closed form: same prefix statistics via Spark windows
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series")).orderBy(col("ts"), col("value"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val exp = samples.filter(!isnan(col("value")))
-      .filter(col("ts") >= T0 && col("ts") <= T31)
-      .withColumn("mu", avg(col("value")).over(w))
-      .withColumn("sigma", stddev_pop(col("value")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-      .filter(col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
-      .filter(abs((col("value") - col("mu")) / col("sigma")) >= 2.0)
-      .select(col("series"), col("ts"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == exp)
+    val got = scores(StreamMonitors.zscoreSlice(fixtureDefault), "z_value")
+    assertClose(got, zscoreClosed(2.0), "zscore")
     assert(got.nonEmpty)
   }
 
   test("streaming cusum == the stacked cumulative-window closed form on the fixture") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    val got = StreamAnomaly.cusumStreamOnce(spark, samples, 2.0,
-        Some(T0), Some(T31), nChunks = 6)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // closed form: prefix stats, then a running sum over the derived
-    // per-row terms — the same two stacked windows as the oracle SQL
-    val wPre = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series")).orderBy(col("ts"), col("value"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series")).orderBy(col("ts"), col("value"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val exp = samples.filter(!isnan(col("value")))
-      .filter(col("ts") >= T0 && col("ts") <= T31)
-      .withColumn("mu", avg(col("value")).over(wPre))
-      .withColumn("sigma", stddev_pop(col("value")).over(wPre))
-      .withColumn("n", count(lit(1)).over(wPre))
-      .withColumn("scored",
-        col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
-      .withColumn("term",
-        when(col("scored"), (col("value") - col("mu")) / col("sigma"))
-          .otherwise(lit(0.0)))
-      .withColumn("cs", sum(col("term")).over(wCum))
-      .filter(col("scored") && abs(col("cs")) >= 2.0)
-      .select(col("series"), col("ts"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == exp)
+    val got = scores(StreamMonitors.cusumSlice(fixtureDefault), "cusum_score")
+    assertClose(got, cusumClosed(2.0), "cusum")
     assert(got.nonEmpty)
   }
 
   test("streaming cusum: a sustained level shift fires where a single outlier would not") {
-    import spark.implicits._
     // quiet alternating prefix, then the mean steps up by 2 sigma-ish
     // — each post-shift sample adds ~+2 to S, crossing threshold 6
     // after ~3 shifted samples even though no single z exceeds ~3
     val quiet = (0L until 12L).map(t => ("a", t, (t % 2).toDouble))
     val shifted = (12L until 20L).map(t => ("a", t, (t % 2).toDouble + 1.5))
     val df = (quiet ++ shifted).toDF("series", "ts", "value")
-    val out = StreamAnomaly.cusumStreamOnce(spark, df, threshold = 6.0, nChunks = 4)
+    val out = StreamMonitors.cusumSlice(pass(df, nChunks = 4, cusum = 6.0))
       .collect().map(r => (r.getLong(1), r.getDouble(3))).sortBy(_._1)
     assert(out.nonEmpty)
     // fires only after the shift, never in the quiet prefix
@@ -254,92 +305,63 @@ class StreamAnomalySpec extends AnyFunSuite {
   }
 
   test("RocksDB provider: cusum stream output identical to default provider") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    def run(rocks: Boolean) = StreamAnomaly.cusumStreamOnce(spark, samples,
-        2.0, Some(T0), Some(T31), nChunks = 6, useRocksDb = rocks)
+    def rows(shared: DataFrame) = StreamMonitors.cusumSlice(shared)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(3))).toSet
-    assert(run(true) == run(false))
+    assert(rows(fixtureRocks) == rows(fixtureDefault))
   }
 
   test("RocksDB provider: zscore stream output identical to default provider") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    def run(rocks: Boolean) = StreamAnomaly.zscoreStreamOnce(spark, samples,
-        2.0, Some(T0), Some(T31), nChunks = 6, useRocksDb = rocks)
+    def rows(shared: DataFrame) = StreamMonitors.zscoreSlice(shared)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(3))).toSet
-    assert(run(true) == run(false))
+    assert(rows(fixtureRocks) == rows(fixtureDefault))
   }
 
   test("zero-flag runs return an empty typed frame, not a read error") {
-    // threshold high enough that nothing ever fires: the sink has no
-    // part files and the read must fall back to the declared schema
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    val out = StreamAnomaly.zscoreStreamOnce(spark, samples, 1e9)
+    // an empty in-range input: no monitor emits, the sink has no part
+    // files and the read must fall back to the declared schema
+    val out = pass(graft.ts.TSModel.samples(spark, sf), nChunks = 8,
+      fromMs = Some(0L), toMs = Some(1L))
     assert(out.count() == 0)
-    assert(out.columns.toSeq == Seq("series", "ts", "value", "z_value"))
+    assert(out.columns.toSeq == Seq("op", "series", "ts", "value", "score", "l1", "d1"))
+    val z = StreamMonitors.zscoreSlice(out)
+    assert(z.count() == 0)
+    assert(z.columns.toSeq == Seq("series", "ts", "value", "z_value"))
   }
 
   test("constant-prefix series: Welford sigma is exactly zero, no spurious alert") {
-    import spark.implicits._
     // 10 identical values then a step: the prefix sigma at the step is
     // exactly 0 under Welford, so NOTHING fires (the oracle's
     // stddev_pop behavior); naive sumsq/n - mu*mu can leave sigma ~1e-9
     // and fire with a huge z
     val rows = ((1 to 10).map(i => ("c", i.toLong, 0.1)) :+ (("c", 11L, 0.2)))
     val df = rows.toDF("series", "ts", "value").repartition(2)
-    val out = StreamAnomaly.zscoreStreamOnce(spark, df, 3.0, nChunks = 2)
-    assert(out.count() == 0)
+    assert(StreamMonitors.zscoreSlice(pass(df, nChunks = 2, z = 3.0)).count() == 0)
   }
 
   test("streaming seasonal == the cohort cumulative-window closed form") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    val got = StreamAnomaly.seasonalStreamOnce(spark, samples, 1.5, "dow",
-        Some(T0), Some(T31), nChunks = 6)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series"), col("season")).orderBy(col("ts"), col("value"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val DAY = 86400000L
-    val exp = samples.filter(!isnan(col("value")))
-      .filter(col("ts") >= T0 && col("ts") <= T31)
-      .withColumn("season", pmod(floor(col("ts") / DAY).cast("long") + 3L, lit(7L)))
-      .withColumn("mu", avg(col("value")).over(w))
-      .withColumn("sigma", stddev_pop(col("value")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-      .filter(col("n") >= StreamAnomaly.MinPrefix && col("sigma") > 0)
-      .filter(abs((col("value") - col("mu")) / col("sigma")) >= 1.5)
-      .select(col("series"), col("ts"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == exp)
+    val got = scores(StreamMonitors.seasonalSlice(fixtureDefault), "s_value")
+    assertClose(got, seasonalClosed(1.5), "seasonal")
     assert(got.nonEmpty)
   }
 
   test("streaming seasonal: a planted cohort spike fires only in its cohort") {
     // Mondays ~5, Tuesdays ~50 for 8 weeks; a 50 on week 9's MONDAY is
     // seasonal-anomalous even though it is a normal Tuesday value
-    val DAY = 86400000L
     val mon0 = 4L * DAY // 1970-01-05, a Monday
     val rows = (0 until 8).flatMap { wk =>
       Seq(("s", mon0 + wk * 7L * DAY, 5.0 + wk % 2),
         ("s", mon0 + wk * 7L * DAY + DAY, 50.0 + wk % 2))
     } :+ (("s", mon0 + 8L * 7L * DAY, 50.0))
-    val out = StreamAnomaly.seasonalStreamOnce(
-      spark, rows.toDF("series", "ts", "value"), threshold = 3.0, mode = "dow",
-      nChunks = 4).collect()
+    val out = StreamMonitors.seasonalSlice(
+      pass(rows.toDF("series", "ts", "value"), nChunks = 4, seasonal = 3.0)).collect()
     assert(out.map(r => (r.getLong(1), r.getLong(3))).toSeq ==
       Seq((mon0 + 56L * DAY, 0L)))
   }
 
   test("streaming rolling quantile == the batch operator (batch-duality)") {
-    val T0 = 1704067200000L; val T31 = 1706745599999L
-    val samples = graft.ts.TSModel.samples(spark, sf)
-    val got = StreamAnomaly.rollingQuantileStreamOnce(spark, samples,
-        q = 0.9, span = 7, Some(T0), Some(T31), nChunks = 5)
-      .collect().map(r => ((r.getString(0), r.getLong(1)), r.getDouble(3))).toMap
-    val exp = graft.ts.Rolling.rollingQuantile(samples, 0.9, 7, Some(T0), Some(T31))
-      .collect().map(r => ((r.getString(0), r.getLong(1)), r.getDouble(3))).toMap
+    val got = scores(StreamMonitors.rollingSlice(fixtureDefault), "rq_value")
+    val exp = scores(graft.ts.Rolling.rollingQuantile(
+      graft.ts.TSModel.samples(spark, sf), 0.9, 7, Some(T0), Some(T31)), "rq_value")
     assert(got.keySet == exp.keySet)
     got.foreach { case (k, v) =>
       assert(math.abs(v - exp(k)) < 1e-12, s"$k: $v vs ${exp(k)}")
@@ -351,15 +373,13 @@ class StreamAnomalySpec extends AnyFunSuite {
     // 6 values, span 3, 3 chunks of 2: the window at ts=5 must be the
     // trailing [3,4,5] even though [0,1,2,3] arrived in earlier batches
     val df = (0L until 6L).map(t => ("s", t, t.toDouble)).toDF("series", "ts", "value")
-    val got = StreamAnomaly.rollingQuantileStreamOnce(spark, df,
-        q = 1.0, span = 3, nChunks = 3)
+    def rq(q: Double) = StreamMonitors.rollingSlice(pass(df, nChunks = 3, q = q, span = 3))
       .collect().map(r => (r.getLong(1), r.getDouble(3))).toMap
+    val got = rq(1.0)
     assert(got(5L) == 5.0)
     // q=1 over trailing 3 = max of window; at ts=1 window is [0,1]
     assert(got(1L) == 1.0)
-    val med = StreamAnomaly.rollingQuantileStreamOnce(spark, df,
-        q = 0.5, span = 3, nChunks = 3)
-      .collect().map(r => (r.getLong(1), r.getDouble(3))).toMap
+    val med = rq(0.5)
     assert(med(5L) == 4.0) // median of [3,4,5]
     assert(med(1L) == 0.5) // interpolated median of [0,1]
   }

@@ -18,10 +18,13 @@ class StreamDedupSpec extends AnyFunSuite {
   test("RocksDB state store: identical output, state metrics reported") {
     // provider choice must be semantics-free — the 100-TB config swap
     // (disk-backed state) produces the exact same canonical mapping
-    val rocks = StreamDedup.documentsDedupOnce(spark, sf, useRocksDb = true)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val (stateRows, _) = StreamDedup.lastStateMetrics
-      .getOrElse(fail("no state metrics captured"))
+    // state metrics come from the final query progress, seen through a
+    // streaming listener
+    val (rocks, metrics) = graft.ts.Replay.withStateMetrics(spark) {
+      StreamDedup.documentsDedupOnce(spark, sf, useRocksDb = true)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    }
+    val (stateRows, _) = metrics.getOrElse(fail("no state metrics captured"))
     val want = Dedup.exact(Text.loadDocuments(spark, sf))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(rocks == want)

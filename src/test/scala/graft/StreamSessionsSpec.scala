@@ -1,16 +1,29 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ts.{Sessions, StreamSessions}
+import graft.ts.{Sessions, StreamMonitors, StreamSessions}
 
 /** Native session_window streaming == the batch lag/cumsum session
   * operator: the inclusive merge contract at the exact-boundary case
   * (diff == gap merges in both engines), presence semantics for NaN
   * arrivals, cross-chunk session merging, and the full-fixture
-  * differential under both state providers. */
+  * differential under both state providers. The streaming gap monitor
+  * ([[StreamMonitors.gapsSlice]] of the shared pass) == the batch gap
+  * report. */
 class StreamSessionsSpec extends AnyFunSuite {
   import SparkTest._
   import spark.implicits._
+
+  /** The shared monitor pass with only the gap monitor under test:
+    * every value monitor gets an inert threshold. */
+  private def gapsStream(df: org.apache.spark.sql.DataFrame, thresholdMs: Long,
+      fromMs: Option[Long] = None, toMs: Option[Long] = None,
+      nChunks: Int = 8) =
+    StreamMonitors.gapsSlice(StreamMonitors.monitorsOnce(spark, df,
+      zThreshold = 99.0, cusumThreshold = 99.0, q = 0.5, span = 3,
+      gapThresholdMs = thresholdMs, seasonalThreshold = 99.0,
+      seasonalMode = "dow", fromMs = fromMs, toMs = toMs,
+      nChunks = nChunks, cacheKey = None))
 
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.collect().map { r =>
@@ -64,8 +77,7 @@ class StreamSessionsSpec extends AnyFunSuite {
       ("a", 500L, 3.0), ("a", 510L, 4.0),
       ("b", 5L, 1.0))
     val df = rows.toDF("series", "ts", "value")
-    val got = StreamSessions.gapsStreamOnce(spark, df, thresholdMs = 50L,
-        nChunks = 3)
+    val got = gapsStream(df, thresholdMs = 50L, nChunks = 3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2)).toSeq
     assert(got == Seq(("a", 10L, 500L, 490L)))
@@ -80,7 +92,7 @@ class StreamSessionsSpec extends AnyFunSuite {
     val batch = canonGaps(Sessions.gaps(samples, thresholdMs = 2 * 86400000L,
       fromMs = Some(T0), toMs = Some(T31)))
     assert(batch.nonEmpty)
-    val stream = canonGaps(StreamSessions.gapsStreamOnce(spark, samples,
+    val stream = canonGaps(gapsStream(samples,
       thresholdMs = 2 * 86400000L, fromMs = Some(T0), toMs = Some(T31),
       nChunks = 6))
     assert(stream == batch)
@@ -112,7 +124,7 @@ class StreamSessionsSpec extends AnyFunSuite {
     // range excludes everything -> zero staged rows
     assert(StreamSessions.sessionStreamOnce(spark, samples, "avg",
       gapMs = 1000L, fromMs = Some(100L), toMs = Some(200L)).count() == 0)
-    assert(StreamSessions.gapsStreamOnce(spark, samples,
+    assert(gapsStream(samples,
       thresholdMs = 1000L, fromMs = Some(100L), toMs = Some(200L)).count() == 0)
     // two rows against nChunks = 8: fewer part files than chunks
     val two = StreamSessions.sessionStreamOnce(spark, samples, "avg",
